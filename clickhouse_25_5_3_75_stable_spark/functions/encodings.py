@@ -44,7 +44,7 @@ Execution shape: everything is an Arrow-batched pandas UDF; the morton
 spread/compact is numpy over the whole batch (≤32 vector ops), CRC is
 a numpy uint64 table walk per row, the rest are per-row Python on
 boundary-tier functions (none are scan hot paths at 100 TB — the
-sharding-key hashes live in hashes_extra*.py).
+sharding-key hashes live in hashing.py).
 """
 
 from __future__ import annotations

@@ -16,7 +16,7 @@ This module is an independent transcription of that published model —
 the cube-face projection (quadratic UV<->ST), the per-face Hilbert
 curve with the 4-level lookup tables generated from the spec's
 position/orientation arrays, leaf encoding ``face<<60 | pos | 1`` —
-the same dual-transcription tier as cityhash.py / h3.py.  No geo
+the same dual-transcription tier as hash_kernels.py / h3.py.  No geo
 libraries are involved; everything is float64 + uint64 bit math.
 
 UInt64 transport: cell ids are BIGINT two's-complement bit patterns

@@ -1268,7 +1268,7 @@ def text_index_has_token(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The LAST FunctionsHashing.h names (round 5 — after this, every hash
 # the reference registers is exact): 32-bit family + Java-family +
 # URLHash + keyed SipHash. Values from the validated scalars in
-# functions/hashes_extra3.py (published anchors; javaHash additionally
+# functions/hash_kernels.py (published anchors; javaHash additionally
 # JVM-live-checked in tests/test_hashes_extra3.py).
 _HASH32_FIXTURES = [
     # (sid, gcc, kafka, m2_32, m3_32, xxh32, java, hive, sip_keyed_7_13)
@@ -1310,7 +1310,7 @@ def func_hash32_java_family_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     MurmurHash3Impl32:451, ImplXxHash32:674, JavaHashImpl:514 with the
     famous polygenelubricants → Integer.MIN_VALUE anchor,
     HiveHashImpl:597, URLHashImpl:1520 trailing-char drop,
-    SipHash64KeyedImpl:215 — functions/hashes_extra3.py) against
+    SipHash64KeyedImpl:215 — functions/hashing.py) against
     checked-in vectors; row 100 pins URLHash's trailing-slash
     equivalence."""
     df = spark.createDataFrame(
@@ -2059,7 +2059,7 @@ def gin_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "hash", "xxhash", "murmur"),
 )
 def func_hash64_family_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 64-bit hash family (functions/hashes_extra.py — XXH64
+    """Exact 64-bit hash family (functions/hash_kernels.py — XXH64
     seed-0, MurmurHash64A, MurmurHash3_x64_128 low^high, intHash64/32
     per FunctionsHashing.h) against pinned vectors: rows 0-3 hash
     strings with (xxHash64, murmurHash2_64, murmurHash3_64); row 100 is
@@ -2100,7 +2100,7 @@ def func_hash64_family_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cityHash64 vector fixtures: every length class of the v1.0.2
 # algorithm (0 / 1-3 / 4-8 / 9-16 / 17-32 / 33-64 / >64 incl. multi-
 # chunk), plus the multi-arg Hash128to64 combine and an Int64-typed
-# input. Values generated by functions/cityhash.py cityhash64_py
+# input. Values generated by functions/hash_kernels.py cityhash64_py
 # (dual-transcription validated — see that module's docstring for the
 # validation-scope statement) and pinned here as the oracle.
 _CITY_FIXTURES: list[tuple[int, str, int]] = [
@@ -2184,7 +2184,7 @@ def func_cityhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Hash long-tail fixtures (round-5 verdict ask #2): every remaining
 # 64-bit hash family, EXACT. Values generated by the validated scalar
-# transcriptions in functions/hashes_extra2.py — see that module's
+# transcriptions in functions/hash_kernels.py — see that module's
 # docstring for the per-family ground-truth statement (xxh3 ←
 # libxxhash.so; farmFingerprint64 ← Guava farmHashFingerprint64;
 # metroHash64 ← published 63-byte verification vector; wyHash64 ←
@@ -2247,7 +2247,7 @@ def func_hash_longtail_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """farmHash64 / farmFingerprint64 / metroHash64 / wyHash64 / xxh3
     EXACT values (reference FunctionsHashing.h ImplFarmHash64:640,
     ImplFarmFingerprint64:628, ImplMetroHash64:651, ImplWyHash64:1722,
-    ImplXXH3:710 — functions/hashes_extra2.py) against checked-in
+    ImplXXH3:710 — functions/hash_kernels.py) against checked-in
     vectors covering every length class, each family's multi-argument
     combine rule (Hash128to64 / Fingerprint / wyhash-concat), and the
     two POD rules (intHash64 bit-mix for farm*/metro vs raw LE bytes

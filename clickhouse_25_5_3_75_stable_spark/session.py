@@ -85,96 +85,17 @@ def get_spark(
 
 def register_sql_udfs(spark: SparkSession) -> None:
     """Expose pandas-UDF-backed CH functions to SQL text (the chsql
-    shim passes these names through): exact sipHash64, geohash trio."""
+    shim passes these names through): the hash table, geohash trio."""
+    from clickhouse_25_5_3_75_stable_spark.functions import hashing
     from clickhouse_25_5_3_75_stable_spark.functions.geohash import (
         _boxes_udf,
         _decode_udf,
         _encode_udf,
     )
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import _udf as _sip_udf
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_sql_ddl
 
-    # sipHash64 bare name: string-rendering semantics (exact for String
-    # inputs) for direct spark.sql() users. The chsql shim rewrites
-    # sipHash64(x) to ch_siphash64_typed(CAST(x AS STRING), typeof(x)),
-    # so CH SQL gets the reference's native-width typed hashing.
-    spark.udf.register("sipHash64", _sip_udf("str"))
-    spark.udf.register("sipHash64_bin", _sip_udf("binary"))
-    spark.udf.register("sipHash64_f64", _sip_udf("f64"))
-    spark.udf.register("sipHash64_f32", _sip_udf("f32"))
-    for ddl in siphash64_sql_ddl():
-        spark.sql(ddl)
-
-    from clickhouse_25_5_3_75_stable_spark.functions import cityhash as _city
-
-    spark.udf.register("cityHash64_bin", _city._udf())
-    spark.udf.register("cityHash64_pod", _city._int_udf())
-    spark.udf.register("cityHash64_f64", _city._f64_udf())
-    spark.udf.register("cityHash64_f32", _city._f32_udf())
-    spark.udf.register("ch_cityhash64_combine", _city._combine_udf())
-    for ddl in _city.cityhash64_sql_ddl():
-        spark.sql(ddl)
-
-    from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra as _hx
-
-    # exact XXH64 through SQL text; combine = Hash128to64 (same python
-    # UDF as cityHash64's, under the xxhash alias)
-    spark.udf.register("xxHash64_bin", _hx._bytes_udf("xxh64"))
-    spark.udf.register("xxHash64_f64", _hx._float_udf("xxh64", 64))
-    spark.udf.register("xxHash64_f32", _hx._float_udf("xxh64", 32))
-    spark.udf.register("ch_xxhash64_combine", _city._combine_udf())
-    for ddl in _hx.xxhash64_sql_ddl():
-        spark.sql(ddl)
-    # exact halfMD5 through SQL text (pure-SQL body, no python UDF)
-    for ddl in _hx.halfmd5_sql_ddl():
-        spark.sql(ddl)
-    # exact jump consistent hash as a plain SQL name (integer args —
-    # no typed rewrite needed)
-    spark.udf.register("jumpConsistentHash", _hx._jump_udf())
-
-    # round-5 hash long tail through SQL text — every FunctionsHashing.h
-    # name reachable from chsql (see each module's *_sql_ddl docstring)
-    from clickhouse_25_5_3_75_stable_spark.functions import (
-        hashes_extra2 as _hx2,
-    )
-    from clickhouse_25_5_3_75_stable_spark.functions import (
-        hashes_extra3 as _hx3,
-    )
-
-    spark.udf.register("farmHash64_bin", _hx2._bytes_udf("farm_xo"))
-    spark.udf.register("farmFingerprint64_bin", _hx2._bytes_udf("farm_fp"))
-    spark.udf.register("metroHash64_bin", _hx2._bytes_udf("metro64"))
-    for kind, prefix in (("wyhash", "wyHash64"), ("xxh3", "xxh3"),
-                         ("gcc_murmur", "gccMurmurHash"),
-                         ("kafka_murmur", "kafkaMurmurHash"),
-                         ("murmur2_32", "murmurHash2_32"),
-                         ("murmur3_32", "murmurHash3_32"),
-                         ("xxh32", "xxHash32")):
-        spark.udf.register(f"{prefix}_bin", _hx._bytes_udf(kind))
-        spark.udf.register(f"{prefix}_f64", _hx._float_udf(kind, 64))
-        spark.udf.register(f"{prefix}_f32", _hx._float_udf(kind, 32))
-    spark.udf.register("javaHash_bin", _hx3._java_bytes_udf())
-    spark.udf.register("javaHashUTF16_bin", _hx3._java_utf16_udf())
-    spark.udf.register("ch_wyhash64_combine", _hx2._wy_combine_udf())
-    # per-rule combines: intHash64(h1)^h2 and (intHash32(h1)^h2)&M32
-    spark.udf.register("ch_inthash64", _hx._int_mix_udf("inthash64"))
-    spark.udf.register("ch_inthash32", _hx._int_mix_udf("inthash32"))
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_int64xor_combine"
-        "(h1 BIGINT, h2 BIGINT) RETURNS BIGINT RETURN "
-        "IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        "ch_inthash64(h1) ^ h2)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_int32xor_combine"
-        "(h1 BIGINT, h2 BIGINT) RETURNS BIGINT RETURN "
-        "IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        "(ch_inthash32(h1) ^ h2) & 4294967295)"
-    )
-    for ddl in _hx2.hash_longtail_sql_ddl():
-        spark.sql(ddl)
-    for ddl in _hx3.hash32_sql_ddl():
-        spark.sql(ddl)
+    # every FunctionsHashing.h name that chsql emits (hashing.SQL_CALLS);
+    # sipHash128*, murmurHash3_128 and sipHash64Keyed stay Column-only
+    hashing.register_sql(spark)
 
     spark.udf.register("geohashEncode", _encode_udf())
     spark.udf.register("geohashDecode", _decode_udf())

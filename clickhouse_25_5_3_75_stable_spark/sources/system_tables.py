@@ -1722,7 +1722,7 @@ def system_query_result_cache_table(spark: SparkSession) -> DataFrame:
     import datetime
     from decimal import Decimal
 
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_py
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import siphash64_py
     from clickhouse_25_5_3_75_stable_spark.operators.result_cache import (
         default_cache,
     )

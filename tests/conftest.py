@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from clickhouse_25_5_3_75_stable_spark.session import get_spark
@@ -102,7 +104,21 @@ _SLOW_NODEIDS = {
 }
 
 
+def _named_nodeids(config) -> set[str]:
+    """Nodeids named on the command line (``path::test[param]``),
+    relative to the rootdir like ``item.nodeid``."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            full = os.path.join(config.invocation_params.dir, path)
+            named.add(os.path.relpath(full, config.rootpath) + "::" + rest)
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    # a slow test named explicitly on the command line runs
+    named = _named_nodeids(config)
     for item in items:
-        if item.nodeid in _SLOW_NODEIDS:
+        if item.nodeid in _SLOW_NODEIDS and item.nodeid not in named:
             item.add_marker(pytest.mark.slow)

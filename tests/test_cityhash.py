@@ -17,7 +17,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     K2,
     _cityhash64_np,
     cityhash64_py,

@@ -263,11 +263,11 @@ def test_siphash64_exact_reference_values(spark):
     src/Common/SipHash.h)."""
     import numpy as np
 
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         _siphash64_np,
-        siphash64,
         siphash64_py,
     )
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import siphash64
 
     k0, k1 = 0x0706050403020100, 0x0F0E0D0C0B0A0908
     assert siphash64_py(b"", k0, k1) == 0x726FDB47DD0E0E31
@@ -459,7 +459,7 @@ def test_siphash64_auto_dispatch_and_chain(spark):
     import numpy as np
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_py
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import siphash64_py
 
     def as_i64(v):
         return np.int64(np.uint64(v)).item()
@@ -527,10 +527,8 @@ def test_siphash64_typed_inputs(spark):
     rows' hashes)."""
     import numpy as np
 
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        siphash64,
-        siphash64_py,
-    )
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import siphash64_py
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import siphash64
 
     def as_i64(v):
         return np.int64(np.uint64(v)).item()

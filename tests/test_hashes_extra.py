@@ -10,12 +10,12 @@ import random
 import numpy as np
 import pyspark.sql.functions as F
 
-from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     hash128to64_py,
     inthash64_py,
 )
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
-from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     _murmur2_64a_np,
     _murmur3_64_np,
     _np_inthash32,
@@ -122,7 +122,7 @@ def test_inthash_sign_extends_narrow_ints(spark):
     ints (plain C++ conversion, FunctionsHashing.h:753) — unlike
     cityHash64's POD path, which zero-extends via bit_cast (review
     finding: the two rules differ and both must be exact)."""
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         inthash32_py,
     )
 
@@ -136,7 +136,7 @@ def test_inthash_sign_extends_narrow_ints(spark):
     zero_ext = 0xFFFFFFF9
     assert row.h64 == as_i64(inthash64_py(sign_ext))
     assert row.h32 == inthash32_py(sign_ext)
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         inthash64_py as _ih,
     )
 
@@ -149,7 +149,7 @@ def test_halfmd5_exact(spark):
     import hashlib
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         halfmd5_py,
     )
 
@@ -183,7 +183,7 @@ def test_jump_consistent_hash_exact(spark):
     import random
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         _np_jump,
         jump_consistent_hash_py,
     )
@@ -224,7 +224,7 @@ def test_siphash128_variants(spark):
     the Spark surface returns BINARY(16) with NULL → NULL."""
     import random
 
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         _siphash128_np,
         _siphash128_reference_np,
         siphash64_py,
@@ -266,7 +266,7 @@ def test_murmur3_128_full_output(spark):
     """murmurHash3_128 returns the full 16 bytes (h1 LE ++ h2 LE);
     anchored by the widely published MurmurHash3_x64_128('hello', 0)
     pair."""
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         _murmur3_128_np,
     )
 

@@ -16,12 +16,12 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     hash128to64_py,
     inthash64_py,
 )
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
-from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     _farm_na_np,
     _farm_xo_np,
     _metro64_np,

@@ -11,10 +11,10 @@ import random
 import numpy as np
 import pyspark.sql.functions as F
 
-from clickhouse_25_5_3_75_stable_spark.functions.cityhash import inthash64_py
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import inthash64_py
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
-from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import inthash32_py
-from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra3 import (
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import inthash32_py
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
     _gcc_np,
     _java_np,
     _kafka_np,
@@ -32,7 +32,7 @@ from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra3 import (
     urlhash_py,
     xxh32_py,
 )
-from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_py
+from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import siphash64_py
 
 
 def as_i64(v: int) -> int:
@@ -141,42 +141,89 @@ def test_spark_dispatch_and_combines(spark):
 
 
 def test_sql_surface_matches_column_api(spark):
-    """chsql SQL text must produce the same exact values as the Column
-    API for the whole round-5 hash long tail (round-5 fix: farmHash64
-    in SQL silently hit Spark's builtin xxhash64 before)."""
+    """chsql SQL text must give the same values as the Column API for
+    every name chsql emits (hashing.SQL_CALLS), over every typed input
+    with a NULL row, and for a two-argument call of every combine rule
+    (round-5 fix: farmHash64 in SQL silently hit Spark's builtin
+    xxhash64 before). One frame per type carries every name."""
+    import datetime
+
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import HASHES
     from clickhouse_25_5_3_75_stable_spark.session import register_sql_udfs
 
     register_sql_udfs(spark)
-    spark.createDataFrame(
-        [("clickhouse", 42), ("", -7)], "s string, k bigint"
-    ).createOrReplaceTempView("hash_sql_tt")
-    names = ["farmHash64", "farmFingerprint64", "metroHash64", "wyHash64",
-             "xxh3", "gccMurmurHash", "kafkaMurmurHash", "murmurHash2_32",
-             "murmurHash3_32", "xxHash32", "javaHash", "hiveHash"]
-    sql_cols = ", ".join(f"{n}(s) AS s_{n}" for n in names) + ", " + \
-        ", ".join(f"{n}(k) AS k_{n}" for n in names if n != "javaHash")
-    got = ch_sql(spark, f"SELECT {sql_cols} FROM hash_sql_tt ORDER BY s").collect()
-    want = spark.table("hash_sql_tt").select(
-        *[ch(n, F.col("s")).cast("bigint").alias(f"s_{n}") for n in names],
-        *[ch(n, F.col("k")).cast("bigint").alias(f"k_{n}")
-          for n in names if n != "javaHash"],
-    ).orderBy("s").collect()
-    for g, w in zip(got, want):
-        for f in w.asDict():
-            assert g[f] == w[f], (f, g[f], w[f])
-    # multi-arg via SQL == Column combine; URLHash string path
-    pair = ch_sql(
-        spark,
-        "SELECT farmHash64(s, s) AS f2, wyHash64(s, s) AS w2, "
-        "URLHash('http://x.y/a/') AS uh FROM hash_sql_tt WHERE s = 'clickhouse'",
-    ).collect()[0]
-    col = spark.table("hash_sql_tt").filter("s = 'clickhouse'").select(
-        ch("farmHash64", F.col("s"), F.col("s")).alias("f2"),
-        ch("wyHash64", F.col("s"), F.col("s")).alias("w2"),
-        ch("URLHash", F.lit("http://x.y/a/")).alias("uh"),
-    ).collect()[0]
-    assert (pair.f2, pair.w2, pair.uh) == (col.f2, col.w2, col.uh)
+    ints = [42, -7, 0]
+    inputs = {
+        "string": ["clickhouse", "", "http://x.y/a/"],
+        "bigint": [2**40 + 3, -7, 0],
+        "int": ints,
+        "smallint": ints,
+        "tinyint": ints,
+        "boolean": [True, False, True],
+        "date": [datetime.date(2024, 1, 2), datetime.date(1970, 1, 1),
+                 datetime.date(2100, 12, 31)],
+        "timestamp": [datetime.datetime(2024, 1, 2, 3, 4, 5),
+                      datetime.datetime(1970, 1, 1),
+                      datetime.datetime(2038, 1, 19, 3, 14, 8)],
+        "double": [1.5, -0.0, 1e300],
+        "float": [1.5, -2.25, 0.0],
+    }
+    typed = [h.name for h in HASHES] + ["halfMD5", "javaHash", "hiveHash"]
+
+    def frame(view, rows, schema):
+        # one partition: one Python worker per query, one job per check
+        spark.createDataFrame(rows, schema).coalesce(1).createOrReplaceTempView(view)
+
+    def check(view, exprs, cols):
+        got = ch_sql(spark, f"SELECT id, {', '.join(exprs)} FROM {view}").collect()
+        want = spark.table(view).select("id", *cols).collect()
+        assert sorted(r.asDict().items() for r in got) == \
+            sorted(r.asDict().items() for r in want), view
+
+    for t, vals in inputs.items():
+        names = list(typed)
+        if t not in ("string", "double", "float"):  # CAST(s AS BIGINT) refuses text
+            names += ["intHash64", "intHash32"]
+        if t == "string":
+            names += ["URLHash", "javaHashUTF16LE"]
+        view = f"hash_sql_{t}"
+        frame(view, [(i, v) for i, v in enumerate(vals)] + [(len(vals), None)],
+              f"id int, c {t}")
+        check(view, [f"{n}(c) AS {n}" for n in names],
+              [ch(n, F.col("c")).alias(n) for n in names])
+
+    # two arguments: every table row and halfMD5 cover all combine rules
+    frame("hash_sql_pair",
+          [(0, "clickhouse", 42), (1, "", -7), (2, None, 1), (3, "x", None)],
+          "id int, s string, k bigint")
+    pair = [h.name for h in HASHES] + ["halfMD5"]
+    check("hash_sql_pair", [f"{n}(s, k) AS {n}" for n in pair],
+          [ch(n, F.col("s"), F.col("k")).alias(n) for n in pair])
+
+
+def test_sql_names_registered_and_plan_shape(spark):
+    """Every function chsql can emit for a hash resolves after
+    get_spark, and a string column hashed through SQL text runs as one
+    ArrowEvalPython over the binary UDF (the typeof CASE folds)."""
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import HASHES, SQL_CALLS
+
+    registered = {f.name.lower() for f in spark.catalog.listFunctions() if f.isTemporary}
+    needed = {c.fn for c in SQL_CALLS.values()}
+    needed |= {c.combine for c in SQL_CALLS.values() if c.combine}
+    for h in HASHES:
+        pods = "cityHash64" if h.int_pods else h.name
+        needed |= {f"{h.name}_bin", f"{pods}_f64", f"{pods}_f32"}
+        if h.int_pods:
+            needed.add("cityHash64_pod")
+    assert {n.lower() for n in needed} - registered == set()
+
+    spark.createDataFrame([("a",), (None,)], "c string").createOrReplaceTempView("hash_plan_t")
+    plan = ch_sql(spark, "SELECT xxHash64(c) AS h FROM hash_plan_t") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "xxHash64_bin(" in plan, plan
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +235,7 @@ def test_sip128_reference_keyed_published_vectors():
     """The official 128-bit SipHash-2-4 with the reference
     implementation's published test key 000102..0f — first two entries
     of vectors_sip128."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         siphash128_reference_keyed_py,
     )
 
@@ -202,7 +249,7 @@ def test_sip128_reference_keyed_published_vectors():
 
 
 def test_sip128_keyed_zero_key_equals_unkeyed():
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         siphash128_keyed_py,
         siphash128_py,
         siphash128_reference_keyed_py,
@@ -237,7 +284,7 @@ def test_sip128_keyed_column_api(spark):
     assert row.k713 != row.plain
     assert len(row.multi) == 32  # BINARY(16)
     # combine rule cross-check against the scalar reference
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
+    from clickhouse_25_5_3_75_stable_spark.functions.hash_kernels import (
         siphash128_keyed_py,
     )
 
